@@ -1,28 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every contract query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
   * A full warm-up lap runs first so the timed lap measures plan
-  * execution, not JVM/codegen warm-up: profiling (BenchProfile) showed
-  * identical queries cost ~10s during the first minute of a fresh JVM
-  * and ~0.3-1s at steady state — on a long-lived cluster the
+  * execution, not JVM/codegen warm-up: profiling showed identical
+  * queries cost ~10s during the first minute of a fresh JVM and
+  * ~0.3-1s at steady state — on a long-lived cluster the
   * steady-state number is the honest one.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Harness.session()
     // GRAFT_BENCH_ONLY=a,b,c restricts the lap to named queries — for
     // targeted variance experiments; the driver's official run never
     // sets it (an unset var is the full surface)
@@ -34,13 +25,7 @@ object Bench {
     // measured query: setups run (and are timed) ONCE here, so both
     // laps below time query plans — a regression in a store read can
     // no longer hide inside rebuild noise, and vice versa
-    val setups = SparkEntry.benchSetups.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir) catch { case e: Throwable =>
-        System.err.println(s"[bench] setup $name failed: ${e.getMessage}")
-      }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    val setups = Harness.setups(spark, sfDir, SparkEntry.benchSetups.keys)
     // noop sink: forces evaluation of EVERY output column (a bare
     // count() lets the optimizer prune projection-only work away and
     // times a fiction). After each query, drop every persistent RDD
@@ -49,7 +34,7 @@ object Bench {
     // are registered as persistent and only evict on GC — across hundreds of
     // queries x 2 laps they accumulate in the block manager and
     // squeeze unified memory out from under big-shuffle queries
-    // (observed: graph_closeness 2.9s warm -> 7.7s official; TimeOne
+    // (observed: graph_closeness 2.9s warm -> 7.7s official; warm
     // laps on graph_kcore INCREASING 3.1 -> 4.4 -> 12.9 inside one
     // JVM — the leak signature). The diff against the pre-query id
     // set exempts setup-built artifacts (IVF/PQ index caches), which

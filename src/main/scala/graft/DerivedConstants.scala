@@ -20,7 +20,7 @@ package graft
   *    code's declaration "this literal is a SIZE, not a contract".
   *  - [[collisions]] cross-checks every recorded value against the
   *    applicable bounds set (global ∪ the SAME query's per-query
-  *    entry). `AuditProbe --all` fails the sweep on any hit, so the
+  *    entry). `Harness audit --all` fails the sweep on any hit, so the
   *    bounds lattice cannot silently re-collide as SFs, generation
   *    laws, or the registries change.
   *

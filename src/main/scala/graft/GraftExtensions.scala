@@ -11,7 +11,7 @@ import graft.functions.GraftExpressions._
   * same fused operators the DataFrame API exposes:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
+  * builder.withExtensions(new GraftExtensions)...
   * // or: spark.sql.extensions=graft.GraftExtensions
   * spark.sql("SELECT graft_minhash(graft_shingles(text, 3), 64) FROM docs")
   * }}}

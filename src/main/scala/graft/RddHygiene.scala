@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Post-query storage sweep for the long-lived harness JVMs (Bench,
-  * TimeOne, Verify): localCheckpoint()ed RDDs — the levenshtein
+  * Harness, Verify): localCheckpoint()ed RDDs — the levenshtein
   * shingle table, graph edge pins, the LPA adjacency — register as
   * persistent and only evict when the GC collects the RDD reference,
   * so a session that executes hundreds of queries accumulates dead
   * checkpoint blocks in the block manager and squeezes unified memory
   * out from under later big-shuffle queries (observed round 11:
-  * graph_closeness 2.9 s warm → 7.7 s official; TimeOne graph_kcore
+  * graph_closeness 2.9 s warm → 7.7 s official; warm graph_kcore
   * laps INCREASING 3.1 → 4.4 → 12.9 s inside one JVM — the leak
   * signature; post-sweep they DECREASE 5.0 → 2.5 → 2.2).
   *
@@ -29,7 +29,7 @@ object RddHygiene {
 
   /** Unpersist every persistent RDD whose id is not in `before`.
     * `blocking = false` (the Bench default) lets block removal proceed
-    * async while the next query plans; TimeOne passes `blocking = true`
+    * async while the next query plans; Harness passes `blocking = true`
     * so the eviction of lap N's blocks cannot steal cycles or memory
     * bandwidth inside lap N+1's timed region — the sweep sits outside
     * the timed section, so the synchronous wait costs the measurement

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthetic hot-relation generator for the SCALING-CURVE measurement
@@ -78,18 +77,14 @@ object ScaleGen {
         val asked = list.split(",").map(_.trim).toSet
         // fail fast on a typo ("event" for "events"): a silently
         // ignored name would print the full summary line while
-        // writing nothing (the GateStamp unknown-query precedent)
+        // writing nothing (the Harness unknown-query precedent)
         val unknown = asked -- known
         require(unknown.isEmpty,
           s"scalegen: unknown table(s) ${unknown.mkString(",")} — known: ${known.toSeq.sorted.mkString(",")}")
         asked
       case None => _ => true
     }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val nCust = (150000 * sf).toLong.max(1)
     val nSupp = (10000 * sf).toLong.max(1)

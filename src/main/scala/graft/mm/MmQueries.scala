@@ -40,8 +40,8 @@ object MmQueries {
     phashParts(s, d, nBands, tier)._2
 
   /** (candidate pairs, final result) at a band geometry — the pair
-    * relation is exposed so MmBandProbe can measure the candidate
-    * count per geometry (the r17 gen10 growth evidence).
+    * relation is where the candidate count per geometry is measured
+    * (the BASELINE.md round-17 mm-family gen10 cells).
     */
   private[mm] def phashParts(s: org.apache.spark.sql.SparkSession, d: String,
       nBands: Int, tier: graft.StaticTier)

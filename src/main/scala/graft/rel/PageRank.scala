@@ -74,7 +74,7 @@ object PageRank {
     // lineage is cut every `checkEvery` rounds: a shallow join/agg
     // tree is still cheap for Catalyst, and skipping most checkpoint
     // materializations is ~20% wall clock (6.8s -> 5.3s warm at
-    // sf0.1 via TimeOne); much deeper and re-analysis cost plus
+    // sf0.1, `Harness time`); much deeper and re-analysis cost plus
     // whole-plan recomputation on executor loss start winning.
     while (it < maxIter && !converged) {
       it += 1

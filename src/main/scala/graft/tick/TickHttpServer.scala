@@ -77,12 +77,9 @@ final class TickHttpServer(spark: SparkSession, store: TickStore, port: Int = 0,
       scala.util.Try(TickQuery.parseTimeNs(time)) match {
         case scala.util.Failure(e) =>
           error(ex, 400, "Bad time format", e.getMessage)
-        case scala.util.Success(ns) =>
-          store.get(spark, p(0), p(1), ns) match {
-            case Some(m) =>
-              val node = mapper.createObjectNode()
-              m.foreach { case (k, v) => node.put(k, v) }
-              respond(ex, 200, mapper.writeValueAsString(node))
+        case scala.util.Success(_) =>
+          TickApi.getPoint(spark, store, p(0), p(1), time) match {
+            case Some(json) => respond(ex, 200, json)
             case None => error(ex, 500, "Server Error", "point not found")
           }
       }
@@ -124,13 +121,30 @@ final class TickHttpServer(spark: SparkSession, store: TickStore, port: Int = 0,
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   server.createContext("/", (ex: HttpExchange) => handle(ex))
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+  // the handler pool's threads are non-daemon: stop() must shut it down
+  // or they keep the JVM alive after the server is gone
+  private val pool = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, s"tick-http-${n.incrementAndGet()}"))
+  }
+  server.setExecutor(pool)
 
   /** Bound port (useful with port=0 for tests). */
   def boundPort: Int = server.getAddress.getPort
 
   def start(): Int = { server.start(); boundPort }
-  def stop(): Unit = server.stop(0)
+
+  /** Stops the listener, then the handler pool: a handler still running
+    * gets up to 10 s to finish before it is interrupted.
+    */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS))
+      pool.shutdownNow()
+    ()
+  }
 
   private def handle(ex: HttpExchange): Unit =
     try {

@@ -62,7 +62,7 @@ object VecQueries {
     * The point is the AGGREGATE STRATEGY — `min(struct(d2, cand))`
     * has no mutable hash buffer, so Spark plans SortAggregate, a full
     * sort of the n×nlist fan-out with interpreted struct comparators
-    * (ProfSeeds A/B at gen3: the 36M-row assignment swings 4.1–42 s
+    * (BASELINE.md round 15, A/B at gen3: the 36M-row assignment swings 4.1–42 s
     * with memory state as struct-min, runs flat as a hash aggregate);
     * a Decimal(38,0) pack IS hash-aggregable but allocates a
     * BigDecimal per fanned-out row (precision > 18 leaves the compact
@@ -137,7 +137,7 @@ object VecQueries {
     // window, no broadcast-join chain, no re-computed subtree (the
     // first cut of this scan paid ~0.8 s of per-stage scheduling
     // overhead for a supOff broadcast join + a second partitioned
-    // window; ProfSeeds is the A/B). Work stays trivially bounded:
+    // window; BASELINE.md round 15 has the A/B). Work stays trivially bounded:
     // the super prefix is 256² in-row adds, and the within-super
     // prefix only expands SUPERS THAT CAN HOLD SEEDS (sup_before <
     // nlist — a handful of 256-element arrays).
@@ -846,8 +846,8 @@ object VecQueries {
       // SCAN's task layout otherwise — and scan granularity tracks
       // input BYTES, not post-explode work (the 16 MB gen3 slice
       // yields 2 input partitions, so 36M fanned-out rows ran on 2 of
-      // 32 cores: 109 s wall for ~100 s of CPU; r15 ProfSeeds stage
-      // ledger). The exchange is NOT an extra shuffle: the plan needs
+      // 32 cores: 109 s wall for ~100 s of CPU; BASELINE.md round-15
+      // stage ledger). The exchange is NOT an extra shuffle: the plan needs
       // av hashpartitioned(id) anyway for the v = asg ⋈ av join, the
       // argmin's grouping requirement is satisfied for free. The count
       // is EXPLICIT (defaultParallelism = cluster width) because a
@@ -1180,7 +1180,7 @@ object VecQueries {
       // localCheckpoint: the iterative-loop rule — the seed table has
       // FIVE consumers below (cex, the cell half-step, the cell means,
       // scell, cellSeeds); unshared, every one re-runs the whole
-      // two-phase seed scan (ProfSeeds prices one run at ~0.6 s of
+      // two-phase seed scan (BASELINE.md round 15 prices one run at ~0.6 s of
       // stage overhead — ×5 was most of the tier's first-cut warm).
       // nlist rows of 64 longs: a deliberate bounded index artifact.
       val seeds = VecQueries.exemplarSeeds(f, nlist).pinned

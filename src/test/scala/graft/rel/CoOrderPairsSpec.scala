@@ -112,7 +112,7 @@ class CoOrderPairsSpec extends SparkSpec {
       s"eval path: expected the packed_pairs range-contract error, got: ${rootMessages(badEval)}")
   }
 
-  test("basket_lift int-coded packed pairs == the string-HOF spelling (sf0.001)") {
+  test("basket_lift packed index pairs == the string-HOF spelling (sf0.001)") {
     // r19: brands int-coded at the part scan so the pair fan-out rides
     // the codegen'd packed_pairs path — pinned row-exact against the
     // r18 string/HOF formulation (which this reference reproduces)

@@ -1,5 +1,7 @@
 package graft.tick
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
 /** Wire-level smoke test: the reference README's curl lifecycle
@@ -94,6 +96,26 @@ class TickHttpSpec extends SparkSpec {
     // unmatched route renders the reference's no_handler 400
     val (nhStatus, nhBody) = http("POST", "/a/b/c/d")
     assert(nhStatus == 400 && nhBody.contains("no_handler"))
+  }
+
+  test("stop() leaves no server thread alive") {
+    def threads = Thread.getAllStackTraces.keySet.asScala.toSet
+    store // session and store up first: only the server's threads are new
+    val before = threads
+    val server = new TickHttpServer(spark, store, port = 0)
+    val sport = server.start()
+    // one request so the handler pool has started a worker
+    val conn = new java.net.URL(s"http://127.0.0.1:$sport/")
+      .openConnection().asInstanceOf[java.net.HttpURLConnection]
+    assert(conn.getResponseCode == 200)
+    conn.disconnect()
+    server.stop()
+    // the server's own threads are the non-daemon ones it started; a
+    // live one keeps the JVM from exiting
+    val started = (threads -- before).filterNot(_.isDaemon)
+    started.foreach(_.join(5000))
+    val alive = started.filter(_.isAlive)
+    assert(alive.isEmpty, s"alive after stop(): ${alive.map(_.getName).mkString(", ")}")
   }
 
   test("raw range queries past the render cap return 413, within it stream fine") {
